@@ -154,7 +154,7 @@ def ngram_jaccard_pairs(
     # (doc id + 64-bit hash = 16 B/shingle); durability is session-
     # configurable via spark.graft.materialize.mode (local checkpoint by
     # default; 'reliable' survives executor loss — see operators/
-    # materialize.py).  eager=True deliberately: a LAZY checkpoint lets
+    # materialize.py).  Eager deliberately: a LAZY checkpoint lets
     # the consuming stages race the cache and re-compute (measured
     # +30-50% on every barriered query); the cost is that plan-only
     # callers (the audit tool) execute the upstream job at construction
@@ -546,14 +546,12 @@ def connected_components(
     edges = materialize(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct(),
-        iterative=True,
+        .distinct()
     )
     labels = materialize(
         edges.select(F.col("u").alias("node"))
         .distinct()
-        .withColumn("label", F.col("node")),
-        iterative=True,
+        .withColumn("label", F.col("node"))
     )
     # r12 NOTE — broadcast-joining labels/nbr_min (the g1/large-star
     # pattern) was tried here and MEASURED SLOWER, then reverted: this
@@ -579,8 +577,7 @@ def connected_components(
                 # convergence flag computed IN the update (labels only ever
                 # decrease, so changed == strictly smaller) — no self-join
                 (new_label < F.col("label")).cast("long").alias("changed"),
-            ),
-            iterative=True,
+            )
         )
         changed = new_labels.agg(F.sum("changed")).first()[0] or 0
         labels = new_labels.select("node", "label")
@@ -629,16 +626,14 @@ def connected_components_large_star(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct(),
-        iterative=True,
+        .distinct()
     )
     # node universe from the UNfiltered pairs so self-paired nodes get a
     # (node, node) row, matching connected_components exactly
     all_nodes = materialize(
         pairs.select(F.col(src).alias("node"))
         .union(pairs.select(F.col(dst).alias("node")))
-        .distinct(),
-        iterative=True,
+        .distinct()
     )
 
     # r12 (guide §2.4, the g1 pattern): the per-node min table m is
@@ -688,7 +683,7 @@ def connected_components_large_star(
     # two exceptAll directions every round.
     prev_cnt = edges.count()
     for _ in range(max_iters):
-        new_edges = materialize(_small_star(_large_star(edges)), iterative=True)
+        new_edges = materialize(_small_star(_large_star(edges)))
         new_cnt = new_edges.count()
         changed = 1
         if new_cnt == prev_cnt:

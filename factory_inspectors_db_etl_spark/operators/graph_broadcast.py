@@ -8,8 +8,7 @@ node table removes the edge-side exchange+sort per round — the r11 g1
 win — but an UNGATED broadcast would OOM the driver on billion-node
 graphs (VERDICT r11 item #4: "nothing automatically flips it").
 
-This module centralizes the decision (previously
-``plans/catalog_ext._graph_small_side``, broadcast-always by default):
+This module centralizes the decision:
 
 * ``spark.graft.graph.broadcast`` = ``auto`` (default) | ``true`` | ``false``
   - ``true`` / ``false``: unconditional, the pre-r12 behavior.
@@ -30,7 +29,10 @@ on |V| once per query is a correct conservative bound for every round
 |V| under the threshold means every round's broadcast is too).
 
 Per-call explicit override (``broadcast=True/False``) wins over the
-conf; the g1b/g3b shuffle-mode contract variants use it.
+conf; the g1b/g3b shuffle-mode contract variants use it.  Any other
+conf value — a mode outside ``auto|true|false`` or a ``maxRows`` that
+is not a positive integer — raises ``ValueError`` rather than falling
+back to a default.
 """
 
 from __future__ import annotations
@@ -43,6 +45,7 @@ from pyspark.sql import functions as F
 GRAPH_BROADCAST_CONF = "spark.graft.graph.broadcast"
 GRAPH_BROADCAST_MAX_ROWS_CONF = "spark.graft.graph.broadcast.maxRows"
 _DEFAULT_MAX_ROWS = 20_000_000
+_MODES = ("auto", "true", "false")
 
 
 def resolve_graph_broadcast(
@@ -58,20 +61,22 @@ def resolve_graph_broadcast(
     only when the conf is ``auto`` (pass ``materialized_nodes.count`` so
     non-auto modes never pay the job).
     """
+    mode = spark.conf.get(GRAPH_BROADCAST_CONF, "auto").lower()
+    if mode not in _MODES:
+        raise ValueError(f"{GRAPH_BROADCAST_CONF}={mode!r}; expected one of {_MODES}")
+    raw_limit = spark.conf.get(GRAPH_BROADCAST_MAX_ROWS_CONF, str(_DEFAULT_MAX_ROWS))
+    if not (raw_limit.isdigit() and int(raw_limit) > 0):
+        raise ValueError(
+            f"{GRAPH_BROADCAST_MAX_ROWS_CONF}={raw_limit!r}; expected a positive integer"
+        )
+    limit = int(raw_limit)
     if broadcast is not None:
         return broadcast
-    mode = (spark.conf.get(GRAPH_BROADCAST_CONF, "auto") or "auto").lower()
-    if mode == "false":
-        return False
-    if mode == "true":
-        return True
+    if mode != "auto":
+        return mode == "true"
     # auto: gate on the caller's row bound when one exists
     if n_rows is None:
         return True
-    limit = int(
-        spark.conf.get(GRAPH_BROADCAST_MAX_ROWS_CONF, str(_DEFAULT_MAX_ROWS))
-        or _DEFAULT_MAX_ROWS
-    )
     bound = n_rows() if callable(n_rows) else int(n_rows)
     return bound <= limit
 

@@ -4,7 +4,7 @@ Several operators (MinHash/SimHash signatures, shingle streams, LSH
 bucket tables, tf-idf term frequencies, iterative connected-components
 rounds) must be computed EXACTLY ONCE and then re-read by a downstream
 self-join or loop.  Spark's contract for that is a materialization
-barrier; there are three implementations with different durability:
+barrier; there are two implementations with different durability:
 
 * ``local``    -- ``DataFrame.localCheckpoint``: blocks stored on
                   executor local disk/memory.  Fastest; does NOT survive
@@ -17,13 +17,10 @@ barrier; there are three implementations with different durability:
                   executor loss — the production choice for multi-hour
                   100 TB runs where losing one executor of a thousand is
                   routine, at the cost of a distributed-FS write.
-* ``persist``  -- ``persist(StorageLevel.DISK_ONLY)`` + an eager count.
-                  Keeps lineage (so lost blocks ARE recomputed — at the
-                  price of re-running the upstream plan) but does NOT
-                  truncate the logical plan, so it is unsuitable for the
-                  iterative CC loop (plan doubles per round); offered for
-                  one-shot barriers where recompute-on-loss is preferred
-                  over checkpoint I/O.
+
+Both truncate the logical plan, which the iterative loops (connected
+components, pagerank, BPE merges) REQUIRE: without it the analyzed plan
+doubles per round.
 
 The mode is read per-call from the session conf so a cluster deployment
 flips ALL barriers with one setting and zero code changes:
@@ -36,30 +33,18 @@ flips ALL barriers with one setting and zero code changes:
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 MATERIALIZE_MODE_CONF = "spark.graft.materialize.mode"
-_MODES = ("local", "reliable", "persist")
+_MODES = ("local", "reliable")
 
 
-def materialize(df: DataFrame, eager: bool = True, iterative: bool = False) -> DataFrame:
-    """Materialize ``df`` once, per the session's durability mode.
-
-    ``eager=False`` defers the job to first use (only meaningful for the
-    checkpoint-backed modes; ``persist`` ignores it — persist without an
-    action is not a barrier at all, so the count always runs).
-
-    ``iterative=True`` marks a per-round barrier inside a loop, where
-    plan truncation is REQUIRED (without it the analyzed plan doubles per
-    round); the ``persist`` mode — which materializes but keeps lineage —
-    is mapped to ``local`` there rather than silently exploding the plan.
-    """
+def materialize(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` once (an eager job), per the session's
+    durability mode."""
     mode = df.sparkSession.conf.get(MATERIALIZE_MODE_CONF, "local")
-    if iterative and mode == "persist":
-        mode = "local"
     if mode == "local":
-        return df.localCheckpoint(eager=eager)
+        return df.localCheckpoint(eager=True)
     if mode == "reliable":
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
@@ -68,9 +53,5 @@ def materialize(df: DataFrame, eager: bool = True, iterative: bool = False) -> D
                 "call spark.sparkContext.setCheckpointDir('<durable fs path>') "
                 "before running the operator"
             )
-        return df.checkpoint(eager=eager)
-    if mode == "persist":
-        out = df.persist(StorageLevel.DISK_ONLY)
-        out.count()
-        return out
+        return df.checkpoint(eager=True)
     raise ValueError(f"unknown {MATERIALIZE_MODE_CONF}={mode!r}; expected one of {_MODES}")

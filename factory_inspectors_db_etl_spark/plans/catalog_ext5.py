@@ -2,7 +2,7 @@
 oracle.
 
 Same contract as ``plans.catalog``: every query has a DuckDB oracle
-registered in ``catalog.ORACLES`` and the pair sits inside the driver's
+registered in ``catalog.CATALOG`` and the pair sits inside the driver's
 50-key window for round 7.  Determinism follows the catalog
 conventions: exact integer sums with one trailing IEEE division per
 float output, integer aggregates CAST to BIGINT in oracles.
@@ -690,7 +690,7 @@ def q_d_semantic_dedup_auto(spark: SparkSession, sf: str) -> DataFrame:
     # assign="exact" EXPLICITLY: this query IS the auto-k/exact-assign
     # baseline (its r8 sweep row, 64.5x at 10x, is why the family's
     # defaults moved to assign="lsh" in round 9 and this form left the
-    # driver registry for PYTEST_ONLY_QUERIES).
+    # driver registry for PYTEST_ONLY).
     return semantic_dedup(
         e,
         n_clusters="auto",
@@ -725,26 +725,3 @@ SELECT u.vec_id, u.centroid_id AS cluster_id, d.vec_id IS NULL AS keep
 FROM u LEFT JOIN dups d ON u.vec_id = d.vec_id
 WHERE u.rn = 1
 """
-
-
-EXT5_QUERIES = {
-    "m_jpeg_decode": q_m_jpeg_decode,
-    "w32_interval_concurrency": q_w32_interval_concurrency,
-    "t_collocation_lift": q_t_collocation_lift,
-    "m_gif_decode": q_m_gif_decode,
-    "w33_position_attribution": q_w33_position_attribution,
-    "p_ldiversity": q_p_ldiversity,
-    "d_semantic_dedup_auto": q_d_semantic_dedup_auto,
-    "a25_quantile_sketch_rollup": q_a25_quantile_sketch_rollup,
-}
-
-EXT5_ORACLES = {
-    "m_jpeg_decode": O_M_JPEG,
-    "w32_interval_concurrency": O_W32_CONCURRENCY,
-    "t_collocation_lift": O_T_COLLOCATION,
-    "m_gif_decode": O_M_GIF,
-    "w33_position_attribution": O_W33_ATTRIBUTION,
-    "p_ldiversity": O_P_LDIVERSITY,
-    "d_semantic_dedup_auto": O_D_SEMANTIC_DEDUP_AUTO,
-    "a25_quantile_sketch_rollup": O_A25_QUANTILE_ROLLUP,
-}

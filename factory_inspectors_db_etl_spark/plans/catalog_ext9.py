@@ -1,4 +1,4 @@
-"""Catalog extension built in round 11, STAGED for the round-12 driver
+"""Catalog extension built in round 11, staged for the round-12 driver
 window (r11's window is the full 50-row r7 cohort — zero spare slots;
 r12 has exactly three: 47 r8-cohort rows + m_bmp_decode + these two =
 50).  Until promotion the local DuckDB-oracle gate
@@ -35,13 +35,7 @@ from pyspark.sql import functions as F
 from ..operators.dedup import assign_components, ngram_cluster_assignments
 from ..operators.sampling import hash_split
 from ..sources.tables import load_table
-
-
-def _portable60_sql(expr: str) -> str:
-    """DuckDB rendering of operators.dedup.portable_hash60 (same as
-    plans.catalog's copy — re-declared here because catalog imports this
-    module, not the reverse)."""
-    return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
+from .catalog_ext import _portable60_sql
 
 
 # ---------------------------------------------------------------------------
@@ -212,14 +206,3 @@ FROM part p
 JOIN rep r ON r.p_brand = p.p_brand AND r.p_name = p.p_name
 LEFT JOIN comp c ON c.node = r.nid
 """
-
-
-EXT9_QUERIES = {
-    "p_cluster_safe_split": q_p_cluster_safe_split,
-    "er_entity_clusters": q_er_entity_clusters,
-}
-
-EXT9_ORACLES = {
-    "p_cluster_safe_split": O_P_CLUSTER_SAFE_SPLIT,
-    "er_entity_clusters": O_ER_ENTITY_CLUSTERS,
-}

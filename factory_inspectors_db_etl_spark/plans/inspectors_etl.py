@@ -123,7 +123,12 @@ def parsed_assignment_rows(
     With ``return_rejects=True`` also returns the quarantine DataFrame
     (P6): rows/assignments the reference warn-and-drops
     (populate_db_ru_v1.py:718-719,748-749) routed to a sink with a reason
-    column instead of vanishing into logs."""
+    column instead of vanishing into logs.
+
+    Not lazy: the call itself runs the HTML read and parse as one Spark
+    job (an eager ``localCheckpoint`` of the reader output, see below),
+    so it costs a full pass over ``paths`` before it returns.  Everything
+    after that barrier stays lazy."""
     # ``cell0_std`` computed once in its own projection (codegen size; see
     # _role_columns docstring).
     # Checkpoint the reader output: the HTML-tokenizer UDTF (U2) is the

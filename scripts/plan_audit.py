@@ -5,7 +5,8 @@ windows, Python-eval islands, and whether filters reach the parquet scan.
 
 Usage: python scripts/plan_audit.py [sf_dir] [out_md]
 Writes a markdown table (default PLAN_AUDIT.md), a machine-readable
-snapshot (PLAN_AUDIT.json), and — when a previous snapshot exists — a
+snapshot (PLAN_AUDIT.json, stamped with the git rev, core count, Spark
+version and SF it was taken at), and — when a previous snapshot exists — a
 "Delta vs previous audit" section flagging any query whose shuffle
 count grew or whose broadcast join count shrank (a silent plan
 regression, e.g. a lost broadcast, previously surfaced only as a
@@ -19,16 +20,15 @@ whole catalog's plan posture at a glance without running .explain 150x.
 
 from __future__ import annotations
 
+import json
 import os
 import re
+import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from factory_inspectors_db_etl_spark.plans.catalog import (  # noqa: E402
-    QUERIES,
-    STAGED_QUERIES,
-)
+from factory_inspectors_db_etl_spark.plans.catalog import QUERIES  # noqa: E402
 from factory_inspectors_db_etl_spark.session import get_spark  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -85,14 +85,32 @@ def audit_one(df) -> dict[str, object]:
     }
 
 
+def _stamp(spark) -> dict[str, object]:
+    """Where the snapshot was taken: plan shapes can depend on the core
+    count (shuffle widths) and the Spark version (planner rules)."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    try:
+        rev = subprocess.run(
+            ["git", "describe", "--always", "--dirty"],
+            cwd=repo, capture_output=True, text=True, check=True,
+        ).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        rev = "unknown"
+    return {
+        "git_rev": rev,
+        "nproc": len(os.sched_getaffinity(0)),
+        "spark_version": spark.version,
+        "sf": SF,
+    }
+
+
 def main() -> None:
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
+    stamp = _stamp(spark)  # before any output file is rewritten
     rows = []
     flags = []
-    # staged rows are audited too — plan hygiene is part of the r12
-    # promotion bar, not something to discover after a driver slot opens
-    for name, fn in {**QUERIES, **STAGED_QUERIES}.items():
+    for name, fn in QUERIES.items():
         try:
             a = audit_one(fn(spark, SF))
         except Exception as e:  # noqa: BLE001
@@ -109,6 +127,10 @@ def main() -> None:
 
     with open(OUT, "w") as f:
         f.write(f"# Plan audit — every registered query at {SF}\n\n")
+        f.write(
+            f"Taken at git `{stamp['git_rev']}` on {stamp['nproc']} cores, "
+            f"Spark {stamp['spark_version']}.\n\n"
+        )
         f.write("Generated by `scripts/plan_audit.py`; hard invariants are pinned in\n")
         f.write("`tests/test_plan_shapes.py`.  Columns: shuffles (Exchange nodes),\n")
         f.write("join strategies, cartesian products, Arrow/Python exec nodes\n")
@@ -132,9 +154,8 @@ def main() -> None:
         else:
             f.write("none — no cartesian products, no unpartitioned windows, no undeclared Python islands\n")
 
-        # --- round-over-round delta vs the previously committed snapshot ---
-        import json
-
+        # --- round-over-round delta vs the previously committed snapshot
+        # (query rows only; the stamp differs run to run by design) ---
         prev = {}
         if os.path.exists(OUT_JSON):
             with open(OUT_JSON) as pf:
@@ -185,7 +206,7 @@ def main() -> None:
 
     with open(OUT_JSON, "w") as jf:
         json.dump(
-            {"sf": SF, "queries": {name: a for name, a in rows}},
+            {"stamp": stamp, "queries": {name: a for name, a in rows}},
             jf,
             indent=1,
         )

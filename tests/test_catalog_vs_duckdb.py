@@ -16,19 +16,15 @@ from factory_inspectors_db_etl_spark.plans.catalog import (
     PYTEST_ONLY_ORACLES,
     PYTEST_ONLY_QUERIES,
     QUERIES,
-    STAGED_ORACLES,
-    STAGED_QUERIES,
 )
 from factory_inspectors_db_etl_spark.sources.tables import TABLE_NAMES
 
 # Demoted queries (quadratic semantic-dedup baselines, VERDICT r8 item
-# #1) and queries STAGED for the next driver window keep their full
-# oracle verification HERE even though they are not driver-registered —
-# the local gate is what "stays verified" means.
-_ALL_QUERIES = {**QUERIES, **PYTEST_ONLY_QUERIES, **STAGED_QUERIES}
-_ALL_ORACLES = {**ORACLES, **PYTEST_ONLY_ORACLES, **STAGED_ORACLES}
+# #1) keep their full oracle verification HERE even though they are not
+# driver-registered — the local gate is what "stays verified" means.
+_ALL_QUERIES = {**QUERIES, **PYTEST_ONLY_QUERIES}
+_ALL_ORACLES = {**ORACLES, **PYTEST_ONLY_ORACLES}
 assert not (set(PYTEST_ONLY_QUERIES) & set(QUERIES)), "demoted query re-registered"
-assert not (set(STAGED_QUERIES) & set(QUERIES)), "staged query double-registered"
 
 
 @pytest.fixture(scope="module")

@@ -50,21 +50,6 @@ def test_materialize_reliable_mode_runs_minhash_green(spark, sf_dir, _restore_mo
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_materialize_persist_mode_matches(spark, sf_dir, _restore_mode):
-    baseline = _rows(QUERIES["d_simhash"](spark, sf_dir))
-    spark.conf.set(MATERIALIZE_MODE_CONF, "persist")
-    assert _rows(QUERIES["d_simhash"](spark, sf_dir)) == baseline
-
-
-def test_materialize_persist_mode_iterative_clusters(spark, sf_dir, _restore_mode):
-    """persist mode maps to a plan-truncating barrier inside iterative
-    loops (materialize(iterative=True)) — the CC query must stay green
-    and convergent under every mode."""
-    baseline = _rows(QUERIES["d_dedup_clusters"](spark, sf_dir))
-    spark.conf.set(MATERIALIZE_MODE_CONF, "persist")
-    assert _rows(QUERIES["d_dedup_clusters"](spark, sf_dir)) == baseline
-
-
 def test_materialize_reliable_without_checkpoint_dir_raises(spark, _restore_mode):
     spark.conf.set(MATERIALIZE_MODE_CONF, "reliable")
     if spark.sparkContext.getCheckpointDir() is not None:

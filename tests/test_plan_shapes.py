@@ -364,10 +364,8 @@ def test_whole_catalog_no_cartesian_no_unpartitioned_window(spark, sf_dir):
     pa = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(pa)
 
-    from factory_inspectors_db_etl_spark.plans.catalog import STAGED_QUERIES
-
     bad = []
-    for name, fn in {**QUERIES, **STAGED_QUERIES}.items():
+    for name, fn in QUERIES.items():
         a = pa.audit_one(fn(spark, sf_dir))
         if a["cartesian"]:
             bad.append(f"{name}: CartesianProduct")
@@ -407,9 +405,9 @@ def test_graph_join_strategy_flips_with_conf(spark, sf_dir):
     spark.graft.graph.broadcast=false (the billion-node scale-out mode,
     VERDICT r4 item #3).  Auto-broadcast is disabled for the shuffle
     probe so the assertion sees the planner's unhinted choice."""
-    from factory_inspectors_db_etl_spark.plans.catalog_ext import (
+    from factory_inspectors_db_etl_spark.operators.graph_broadcast import (
         GRAPH_BROADCAST_CONF,
-        _graph_small_side,
+        graph_small_side,
     )
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
@@ -422,14 +420,14 @@ def test_graph_join_strategy_flips_with_conf(spark, sf_dir):
     )
     contrib = edges.groupBy("src").agg(F.count(F.lit(1)).alias("contrib"))
 
-    plan_bcast = _physical(edges.join(_graph_small_side(spark, contrib), "src"))
+    plan_bcast = _physical(edges.join(graph_small_side(spark, contrib), "src"))
     assert "BroadcastHashJoin" in plan_bcast
 
     old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set(GRAPH_BROADCAST_CONF, "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan_shuffle = _physical(edges.join(_graph_small_side(spark, contrib), "src"))
+        plan_shuffle = _physical(edges.join(graph_small_side(spark, contrib), "src"))
     finally:
         spark.conf.unset(GRAPH_BROADCAST_CONF)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
@@ -448,9 +446,9 @@ def test_graph_join_strategy_size_gate(spark, sf_dir):
     from factory_inspectors_db_etl_spark.operators.graph_broadcast import (
         GRAPH_BROADCAST_CONF,
         GRAPH_BROADCAST_MAX_ROWS_CONF,
+        graph_small_side,
         resolve_graph_broadcast,
     )
-    from factory_inspectors_db_etl_spark.plans.catalog_ext import _graph_small_side
 
     # auto (default): gate by the caller's row bound
     assert resolve_graph_broadcast(spark, None, lambda: 1_000) is True
@@ -482,10 +480,10 @@ def test_graph_join_strategy_size_gate(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             over = _physical(
-                edges.join(_graph_small_side(spark, contrib, None, lambda: 501), "src")
+                edges.join(graph_small_side(spark, contrib, None, lambda: 501), "src")
             )
             under = _physical(
-                edges.join(_graph_small_side(spark, contrib, None, lambda: 499), "src")
+                edges.join(graph_small_side(spark, contrib, None, lambda: 499), "src")
             )
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
@@ -497,6 +495,85 @@ def test_graph_join_strategy_size_gate(spark, sf_dir):
         if spark.conf.get(GRAPH_BROADCAST_CONF, None):
             spark.conf.unset(GRAPH_BROADCAST_CONF)
 
+
+@pytest.mark.parametrize(
+    "key, value",
+    [
+        ("spark.graft.graph.broadcast", "off"),
+        ("spark.graft.graph.broadcast", ""),
+        ("spark.graft.graph.broadcast.maxRows", "0"),
+        ("spark.graft.graph.broadcast.maxRows", "-5"),
+        ("spark.graft.graph.broadcast.maxRows", "2e7"),
+    ],
+)
+def test_graph_broadcast_rejects_bad_conf(spark, key, value):
+    """A bad graph-broadcast setting raises a ValueError naming the key
+    instead of being read as ``auto`` or as a gate nothing passes: the
+    mode must be one of auto|true|false and maxRows a positive integer —
+    even when the call passes an explicit override."""
+    import re
+
+    from factory_inspectors_db_etl_spark.operators.graph_broadcast import (
+        resolve_graph_broadcast,
+    )
+
+    spark.conf.set(key, value)
+    try:
+        with pytest.raises(ValueError, match=re.escape(key)):
+            resolve_graph_broadcast(spark, None, 1)
+        with pytest.raises(ValueError):
+            resolve_graph_broadcast(spark, True)
+    finally:
+        spark.conf.unset(key)
+
+
+@pytest.mark.parametrize(
+    "module, query",
+    [("catalog_ext6", "q_g8_kcore"), ("catalog_ext7", "q_g9_link_prediction")],
+)
+def test_oriented_edge_gate_is_a_true_upper_bound(spark, sf_dir, monkeypatch, module, query):
+    """g8/g9 gate their node-side broadcast on an oriented edge list
+    (u < v), where |V| can reach 2|E|: with maxRows between |E| and 2|E|
+    the gate must resolve to NO broadcast, and at 2|E| to broadcast."""
+    import importlib
+
+    from factory_inspectors_db_etl_spark.operators.graph_broadcast import (
+        GRAPH_BROADCAST_MAX_ROWS_CONF,
+        resolve_graph_broadcast,
+    )
+
+    mod = importlib.import_module(f"factory_inspectors_db_etl_spark.plans.{module}")
+    decisions = []
+
+    def recording(*args):
+        decisions.append(resolve_graph_broadcast(*args))
+        return decisions[-1]
+
+    monkeypatch.setattr(mod, "resolve_graph_broadcast", recording)
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    urgent = (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderpriority") == "1-URGENT")
+        .select(F.col("o_orderkey").alias("l_orderkey"))
+    )
+    li = li.join(urgent, "l_orderkey")
+    a, b = li.alias("a"), li.alias("b")
+    n_edges = (
+        a.join(b, "l_orderkey")
+        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
+        .select("a.l_partkey", "b.l_partkey")
+        .distinct()
+        .count()
+    )
+    assert n_edges > 1
+    try:
+        for max_rows, expected in ((n_edges, False), (2 * n_edges, True)):
+            spark.conf.set(GRAPH_BROADCAST_MAX_ROWS_CONF, str(max_rows))
+            decisions.clear()
+            getattr(mod, query)(spark, sf_dir)
+            assert decisions == [expected], (max_rows, n_edges, decisions)
+    finally:
+        spark.conf.unset(GRAPH_BROADCAST_MAX_ROWS_CONF)
 
 def _simulate_rotation(order, newest, upcoming, rounds):
     """Walk the documented rotation discipline forward: each round's
@@ -547,10 +624,7 @@ def test_simulated_demotion_path_keeps_rotation_feasible():
     mechanics were wrong — e.g. RETIREMENT_ORDER leading with rows whose
     demotion cannot relieve any reachable window — this fails today,
     not at the wall."""
-    from factory_inspectors_db_etl_spark.plans.catalog import (
-        RETIREMENT_ORDER,
-        STAGED_QUERIES,
-    )
+    from factory_inspectors_db_etl_spark.plans.catalog import RETIREMENT_ORDER
 
     newest, upcoming = _driver_evidence()
     hypothetical = ["zz_hypothetical_1", "zz_hypothetical_2", "zz_hypothetical_3"]
@@ -568,11 +642,7 @@ def test_simulated_demotion_path_keeps_rotation_feasible():
     for rnd in range(upcoming, upcoming + 9):
         if swap_round is None and all(sim[k] <= rnd - 4 for k in demoted):
             swap_round = rnd
-            order = (
-                hypothetical
-                + [k for k in order if k not in demoted]
-                + list(STAGED_QUERIES)
-            )
+            order = hypothetical + [k for k in order if k not in demoted]
             assert len(order) <= 200, (
                 "demoting one RETIREMENT_ORDER row per add must bring the "
                 "simulated registry back under the 200-query ceiling"
@@ -602,21 +672,18 @@ def test_registry_ceiling_and_retirement_order():
     matter how the registry is ordered (201 queries / 50 slots > 4
     rounds of staleness budget).  Registering past 200 must fail HERE,
     loudly, with the documented escape hatch: demote rows to
-    PYTEST_ONLY_QUERIES in RETIREMENT_ORDER first.  The list itself is
+    PYTEST_ONLY in RETIREMENT_ORDER first.  The list itself is
     sanity-pinned: every named row must still be registered (a demoted
     row leaves the list) and its subsuming general form must also be
     registered, so retiring never orphans an operator's driver
     evidence."""
-    from factory_inspectors_db_etl_spark.plans.catalog import (
-        RETIREMENT_ORDER,
-        STAGED_QUERIES,
-    )
+    from factory_inspectors_db_etl_spark.plans.catalog import RETIREMENT_ORDER
 
-    total = len(QUERIES) + len(STAGED_QUERIES)
+    total = len(QUERIES)
     assert total <= 200, (
-        f"{total} registered+staged queries > the 200 the 50-slot/4-round "
+        f"{total} registered queries > the 200 the 50-slot/4-round "
         f"rotation supports — demote {total - 200} row(s) to "
-        f"PYTEST_ONLY_QUERIES first, in RETIREMENT_ORDER: {RETIREMENT_ORDER}"
+        f"PYTEST_ONLY first, in RETIREMENT_ORDER: {RETIREMENT_ORDER}"
     )
     subsumed_by = {
         "e2_except": "e2b_except_all",
