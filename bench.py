@@ -20,6 +20,7 @@ import os
 import re
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -209,6 +210,9 @@ def main() -> None:
     # above does NOT cover (isolated 3-run profile: 30.5/13.7/11.6s),
     # so one untimed full-corpus build precedes the timed runs —
     # otherwise the minimum reports compilation, not the pipeline.
+    # fails per item: an entry that cannot run (e.g. its corpus is absent)
+    # is recorded under "errors" and the headline still prints
+    errors: dict[str, str] = {}
     runs = []
     for i in range(4):
         out = tempfile.mkdtemp(prefix="bench_wh_")
@@ -217,9 +221,15 @@ def main() -> None:
             write_warehouse(build_warehouse(spark, "/root/reference/diplom/fabric*.html"), out)
             if i > 0:  # run 0 is the full-plan warm-up
                 runs.append(time.time() - t0)
+        except Exception as e:  # noqa: BLE001 — recorded, never silent
+            errors["etl_warehouse_build"] = f"{type(e).__name__}: {str(e)[:300]}"
+            print("ERROR: etl_warehouse_build failed:", file=sys.stderr)
+            traceback.print_exc()
+            break
         finally:
             shutil.rmtree(out, ignore_errors=True)
-    timings["etl_warehouse_build"] = round(min(runs), 3)
+    else:  # no break: every run succeeded
+        timings["etl_warehouse_build"] = round(min(runs), 3)
 
     # second end-to-end number: the M6 training-set build (near-dup
     # cluster -> keep-best -> quality/lang gates -> split -> pack), at
@@ -283,6 +293,7 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "timing": "min_of_3 per query and pipeline (steady-state)",
+        "errors": errors,
         "order": (
             "sorted query name (canonical, registry-order-independent — "
             "round-over-round warm totals are comparable; see HEADLINE)"
@@ -317,6 +328,7 @@ def main() -> None:
                 "unit": "sec",
                 "sf": sf,
                 "n_queries": len(timings),
+                "errors": sorted(errors),
                 "isolated_floor_families": len(isolated_floor),
                 "detail": "bench_detail.json",
             }

@@ -3,8 +3,9 @@
 Each function exists in two forms with identical semantics:
 
 * ``*_py``  -- plain-Python, used at import time to pre-standardize the
-  reference dictionaries (mirroring populate_db_ru_v1.py:92-158) and inside
-  the personnel-parser UDF where per-row Python already runs.
+  reference dictionaries (mirroring populate_db_ru_v1.py:92-158) and
+  wherever per-row Python already runs: the personnel-parser UDF, and the
+  HTML reader, which emits the standardized cells it already visits.
 * column form -- pure ``pyspark.sql.functions`` expression chain (the hot
   path: JVM-side, whole-stage-codegen, no UDF).
 

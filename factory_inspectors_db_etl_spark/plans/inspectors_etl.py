@@ -13,7 +13,8 @@ State-to-window mapping (all per-file, ordered by the reader's row_idx):
                                           epoch (W2)
   current_senior_inspector_id          -> as-of fill over (file,okrug,gub) (J6)
   rowspan counters                     -> handled inside the reader (W3)
-  dim caches                           -> build_dim + broadcast joins (J2/J1)
+  dim caches                           -> one keyed dim table (one row_number
+                                          per dim) + broadcast joins (J2/J1)
 
 Documented divergences from the reference (SURVEY.md §7):
   * surrogate ids are ordered by natural key (dims) / by (file, row_idx,
@@ -32,7 +33,6 @@ from pyspark.sql import functions as F
 from ..functions.dictionaries import KNOWN_EDUCATIONS, KNOWN_PROFESSIONS, KNOWN_RANKS, ROLE_MAP_STD
 from ..functions.personnel_parser import parse_personnel_udf
 from ..functions.text import canonicalize_person_name, clean_number, standardize_text
-from ..operators.dims import build_dim, mint_surrogate_ids
 from ..operators.fill import forward_fill_expr
 from ..sources.html_table import read_roster_rows
 
@@ -51,11 +51,9 @@ _PROF_EDU_OVERLAP = sorted(set(KNOWN_PROFESSIONS) & set(KNOWN_EDUCATIONS))
 def _role_columns(df: DataFrame) -> DataFrame:
     """F9 role classification (populate_db_ru_v1.py:683-698).
 
-    ``desc_std`` is materialized once (its own projection) rather than
-    inlined per ``when`` branch — inlining the F1 chain 7x blows the
-    whole-stage-codegen method-size limit and forces interpreted fallback.
+    ``desc_std`` comes standardized from the reader, so the role ladder
+    compares a plain column instead of an inlined F1 chain.
     """
-    df = df.withColumn("desc_std", standardize_text(F.col("desc_raw")))
     desc_std = F.col("desc_std")
     role_exact: Column = F.lit(None).cast("string")
     for key, val in ROLE_MAP_STD.items():
@@ -88,7 +86,6 @@ def _role_columns(df: DataFrame) -> DataFrame:
         df.withColumn("position_role", role)
         .withColumn("uchastok_identifier", uch_id)
         .withColumn("uchastok_description", uch_desc)
-        .drop("desc_std")
     )
 
 
@@ -129,8 +126,6 @@ def parsed_assignment_rows(
     job (an eager ``localCheckpoint`` of the reader output, see below),
     so it costs a full pass over ``paths`` before it returns.  Everything
     after that barrier stays lazy."""
-    # ``cell0_std`` computed once in its own projection (codegen size; see
-    # _role_columns docstring).
     # Checkpoint the reader output: the HTML-tokenizer UDTF (U2) is the
     # expensive Python island at the root of EVERY downstream branch (the
     # assignment rows, both reject branches) — without the barrier each
@@ -148,9 +143,7 @@ def parsed_assignment_rows(
     # multi-tenant cluster where executor loss must be survivable, swap
     # for reliable checkpoint() or persist(MEMORY_AND_DISK_2); semantics
     # are identical.
-    rows = read_roster_rows(spark, paths).withColumn(
-        "cell0_std", standardize_text(F.col("cell0_raw"))
-    ).localCheckpoint()
+    rows = read_roster_rows(spark, paths).localCheckpoint()
 
     per_file = W.partitionBy("source_file").orderBy("row_idx")
 
@@ -200,7 +193,6 @@ def parsed_assignment_rows(
     data = rows.filter(F.col("row_kind") == "data").filter(_note_row_filter(rows))
 
     # -- W1 location ditto fill ---------------------------------------------
-    data = data.withColumn("loc_std", standardize_text(F.col("loc_raw")))
     loc_std = F.col("loc_std")
     loc_marker = F.when(loc_std.isNotNull() & (loc_std != "»"), loc_std)
     data = data.withColumn(
@@ -227,12 +219,8 @@ def parsed_assignment_rows(
 
     # -- U1 parse + W2 personnel ditto --------------------------------------
     data = data.withColumn(
-        "is_pers_ditto",
-        standardize_text(F.trim(F.col("personnel_html"))) == F.lit("»"),
-    )
-    data = data.withColumn(
         "parsed",
-        F.when(F.col("is_pers_ditto"), F.lit(None)).otherwise(
+        F.when(F.col("personnel_is_ditto"), F.lit(None)).otherwise(
             parse_personnel_udf(F.col("personnel_html"))
         ),
     ).localCheckpoint()
@@ -252,7 +240,7 @@ def parsed_assignment_rows(
     data = data.withColumn(
         "assignments",
         F.when(
-            F.col("is_pers_ditto"),
+            F.col("personnel_is_ditto"),
             F.when(F.col("ditto_source").isNotNull(), F.array(F.col("ditto_source"))).otherwise(
                 F.array().cast("array<struct<name:string,rank_abbr:string,prof_abbr:string,"
                                "edu_abbr:string,start_date_raw:string,end_date_raw:string,"
@@ -422,29 +410,71 @@ def _lookup_full_name(key_col: str, dictionary: dict[str, str]) -> Column:
     )
 
 
+# each dimension's natural-key columns of the assignment rows, in id
+# order; the fact joins its dims on them
+_DIM_KEYS = {
+    "inspector": ("inspector_key",),
+    "location": ("city_key", "gubernia_std", "okrug_std"),
+    "rank": ("rank_abbr",),
+    "profession": ("profession_key",),
+    "education": ("education_key",),
+}
+
+
+def keyed_dims(a: DataFrame) -> DataFrame:
+    """Every dimension's distinct natural keys in one table ``(dim, k1,
+    k2, k3, city_name, id)``; unused key slots are NULL.
+
+    ``id`` is ``row_number`` within ``dim`` in natural-key order, NULLs
+    first: the order ``operators.dims.build_dim`` ranks by, so the ids
+    equal five separate dim builds, minted by one aggregate and one
+    window.  The window is partitioned by ``dim``, so it is not the
+    single-task funnel: each of its five partitions is no larger than the
+    broadcast the fact join takes anyway.  Location keys may hold NULLs
+    and carry ``city_name`` (the spelling of their first assignment in
+    document order); the other dims drop a NULL key."""
+    null = F.lit(None).cast("string")
+
+    def key(name: str, cols: tuple[str, ...]) -> Column:
+        slots = [F.col(c) for c in cols] + [null] * (3 - len(cols))
+        city = F.col("city_std") if name == "location" else null
+        return F.struct(
+            F.lit(name).alias("dim"), *[k.alias(f"k{i}") for i, k in enumerate(slots, 1)],
+            city.alias("city"), "global_order",
+        )
+
+    keys = a.select(
+        F.explode(F.array(*[key(name, cols) for name, cols in _DIM_KEYS.items()])).alias("key")
+    ).select("key.*")
+    natural = W.partitionBy("dim").orderBy(*[F.col(f"k{i}").asc_nulls_first() for i in (1, 2, 3)])
+    return (
+        keys.filter(F.col("k1").isNotNull() | (F.col("dim") == "location"))
+        .groupBy("dim", "k1", "k2", "k3")
+        .agg(F.min_by("city", "global_order").alias("city_name"))
+        .withColumn("id", F.row_number().over(natural))
+    )
+
+
 def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, DataFrame]:
     """Full star schema from roster HTML files (FIXTURES.md B3), plus the
     ``rejects`` quarantine table (P6).
 
-    The parsed assignment rows are the materialization point: five
-    dims, the fact (whose plan embeds all five dim subtrees), and the
-    rejects union all re-derive them, so without a barrier the HTML
-    parse + personnel UDF would run once PER CONSUMER (~12x on a full
-    warehouse write).  As of r12 the barrier LIVES INSIDE
-    ``parsed_assignment_rows`` (pre-reject-split, so the rejects write
-    shares it — see the stage-profile note there); ``a`` here is a
-    columnar filter over those checkpoint blocks, which also keeps the
-    analyzed plan flat for every consumer."""
+    The parsed assignment rows are the materialization point: the keyed
+    dim table (``keyed_dims``, checkpointed once; every dim and each of
+    the fact's five broadcast joins is a filter over it), the fact and
+    the rejects union all read them, so without a barrier the HTML parse
+    + personnel UDF would run once PER CONSUMER.  The barrier lives inside
+    ``parsed_assignment_rows``, before the reject split, so ``a`` here is
+    a columnar filter over its checkpoint blocks and every consumer's
+    analyzed plan stays flat."""
     a, rejects = parsed_assignment_rows(spark, paths, return_rejects=True)
     # Build telemetry via the observe() API: metrics ride ONE cheap
     # noop-sink pass over the checkpointed assignment rows (columnar
     # aggregates accumulate task-side), which is how a production
     # pipeline gets its row-count / null-rate gates without paying a
-    # real second pass over the raw corpus.  (Pre-r12 the observe rode
-    # a SECOND localCheckpoint of ``a`` — profiling showed that
-    # re-serializing the multi-KB personnel payload into new blocks
-    # cost more than the scan it saved; the noop action runs the same
-    # observe node without storing anything.)  Collected into
+    # real second pass over the raw corpus.  The noop sink stores
+    # nothing (a second checkpoint of the multi-KB personnel payload
+    # cost more than the scan it saved).  Collected into
     # LAST_BUILD_METRICS after the action; pinned equal to a recomputed
     # aggregate in tests/test_inspectors_etl.py.
     obs = Observation("etl_quality")
@@ -467,84 +497,37 @@ def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, Da
     LAST_BUILD_METRICS.clear()
     LAST_BUILD_METRICS.update(obs.get)
 
-    # bucket = first letter of the name: order-preserving (a string sorts
-    # after every string with a smaller first char), so phase-1 windows
-    # parallelize over ~30 letter groups instead of one per distinct name
-    inspectors = build_dim(
-        a.filter(F.col("inspector_key").isNotNull()).select(
-            F.col("inspector_key").alias("full_name")
-        ),
-        ["full_name"],
-        "inspector_id",
-        bucket=F.substring(F.col("full_name"), 1, 1),
-    ).withColumn("notes", F.lit(None).cast("string"))
+    # one eager job mints every dim id; each dim table and each of the
+    # fact's broadcast joins is then a filter over the distinct keys
+    keyed = keyed_dims(a).localCheckpoint()
 
-    locations = (
-        a.groupBy("city_key", "gubernia_std", "okrug_std")
-        .agg(F.min_by("city_std", "global_order").alias("city_name"))
-        .withColumn("location_type", F.lit("Город"))
-    )
-    locations = mint_surrogate_ids(
-        locations, ["city_key", "gubernia_std", "okrug_std"], "location_id"
-    ).select(
-        "location_id", "city_name", "city_key",
-        F.col("gubernia_std").alias("gubernia_name"),
-        F.col("okrug_std").alias("okrug_name"),
-        "location_type",
-    )
+    def dim(name: str, *cols: Column | str) -> DataFrame:
+        return keyed.filter(F.col("dim") == name).select(*cols)
 
-    def _abbr_dim(key_col: str, id_col: str, dictionary: dict[str, str]) -> DataFrame:
-        dim = build_dim(
-            a.filter(F.col(key_col).isNotNull()).select(F.col(key_col).alias("abbreviation")),
-            ["abbreviation"],
-            id_col,
+    def abbr_dim(name: str, dictionary: dict[str, str]) -> DataFrame:
+        return dim(
+            name, F.col("id").alias(f"{name}_id"), F.col("k1").alias("abbreviation"),
+            _lookup_full_name("k1", dictionary).alias("full_name_ru"),
         )
-        return dim.withColumn("full_name_ru", _lookup_full_name("abbreviation", dictionary))
 
-    ranks = _abbr_dim("rank_abbr", "rank_id", KNOWN_RANKS).withColumn(
-        "rank_type", F.lit(None).cast("string")
+    inspectors = dim(
+        "inspector", F.col("id").alias("inspector_id"), F.col("k1").alias("full_name"),
+        F.lit(None).cast("string").alias("notes"),
     )
-    professions = _abbr_dim("profession_key", "profession_id", KNOWN_PROFESSIONS)
-    educations = _abbr_dim("education_key", "education_id", KNOWN_EDUCATIONS)
+    locations = dim(
+        "location", F.col("id").alias("location_id"), "city_name",
+        F.col("k2").alias("gubernia_name"), F.col("k3").alias("okrug_name"),
+        F.lit("Город").alias("location_type"),
+    )
+    ranks = abbr_dim("rank", KNOWN_RANKS).withColumn("rank_type", F.lit(None).cast("string"))
+    professions = abbr_dim("profession", KNOWN_PROFESSIONS)
+    educations = abbr_dim("education", KNOWN_EDUCATIONS)
 
-    fact = (
-        a.join(
-            F.broadcast(inspectors.select(F.col("full_name").alias("inspector_key"), "inspector_id")),
-            on="inspector_key",
-            how="left",
-        )
-        .join(
-            F.broadcast(
-                locations.select(
-                    "location_id",
-                    "city_key",
-                    F.col("gubernia_name").alias("gubernia_std"),
-                    F.col("okrug_name").alias("okrug_std"),
-                )
-            ),
-            on=["city_key", "gubernia_std", "okrug_std"],
-            how="left",
-        )
-        .join(
-            F.broadcast(ranks.select(F.col("abbreviation").alias("rank_abbr"), "rank_id")),
-            on="rank_abbr",
-            how="left",
-        )
-        .join(
-            F.broadcast(
-                professions.select(F.col("abbreviation").alias("profession_key"), "profession_id")
-            ),
-            on="profession_key",
-            how="left",
-        )
-        .join(
-            F.broadcast(
-                educations.select(F.col("abbreviation").alias("education_key"), "education_id")
-            ),
-            on="education_key",
-            how="left",
-        )
-    )
+    fact = a
+    for name, cols in _DIM_KEYS.items():
+        keys = [F.col(f"k{i}").alias(c) for i, c in enumerate(cols, 1)]
+        ids = dim(name, F.col("id").alias(f"{name}_id"), *keys)
+        fact = fact.join(F.broadcast(ids), on=list(cols), how="left")
     # W6 surrogate ids, two-phase: per-file row_number (parallel windows,
     # bounded by rows-per-document) + broadcast cumulative offsets ordered
     # by year — identical ids to a global row_number over global_order
@@ -603,13 +586,11 @@ def build_warehouse(spark: SparkSession, paths: str | list[str]) -> dict[str, Da
     )
 
     return {
-        "inspectors": inspectors.select("inspector_id", "full_name", "notes"),
-        "locations": locations.select(
-            "location_id", "city_name", "gubernia_name", "okrug_name", "location_type"
-        ),
-        "ranks": ranks.select("rank_id", "abbreviation", "full_name_ru", "rank_type"),
-        "professions": professions.select("profession_id", "abbreviation", "full_name_ru"),
-        "educations": educations.select("education_id", "abbreviation", "full_name_ru"),
+        "inspectors": inspectors,
+        "locations": locations,
+        "ranks": ranks,
+        "professions": professions,
+        "educations": educations,
         "assignments": fact,
         "rejects": rejects,
     }

@@ -225,6 +225,12 @@ READER_SCHEMA = T.StructType(
         T.StructField("loc_raw", T.StringType()),
         T.StructField("personnel_html", T.StringType()),
         T.StructField("n_raw_cells", T.IntegerType()),
+        # standardize_text_py of the data-row cells the ETL compares on
+        # (NULL on header rows)
+        T.StructField("cell0_std", T.StringType()),
+        T.StructField("desc_std", T.StringType()),
+        T.StructField("loc_std", T.StringType()),
+        T.StructField("personnel_is_ditto", T.BooleanType()),
     ]
 )
 
@@ -326,6 +332,10 @@ def _emit_file_rows(source_file: str, year: int, html_text: str) -> Iterator[dic
                 "loc_raw": None,
                 "personnel_html": None,
                 "n_raw_cells": len(row.tds()),
+                "cell0_std": None,
+                "desc_std": None,
+                "loc_std": None,
+                "personnel_is_ditto": None,
             }
             continue
 
@@ -368,6 +378,8 @@ def _emit_file_rows(source_file: str, year: int, html_text: str) -> Iterator[dic
         if span_loc_n == 0:
             span_loc_text = None
 
+        # the JVM form compares NULL (an empty cell) to "»" as NULL, not False
+        pers_std = standardize_text_py(effective[pers_i])
         yield {
             "source_file": source_file,
             "year": year,
@@ -383,6 +395,10 @@ def _emit_file_rows(source_file: str, year: int, html_text: str) -> Iterator[dic
             "loc_raw": effective[loc_i],
             "personnel_html": effective[pers_i],
             "n_raw_cells": len(raw_cells),
+            "cell0_std": standardize_text_py(effective[0]),
+            "desc_std": standardize_text_py(effective[desc_i]),
+            "loc_std": standardize_text_py(effective[loc_i]),
+            "personnel_is_ditto": None if pers_std is None else pers_std == "»",
         }
 
 
