@@ -1,10 +1,12 @@
 """HTML table source (SURVEY.md §2.1 S2/S3, §2.10 U2).
 
-A Spark reader for the reference corpus' yearly roster files: whole-file
-text rows (``spark.read.text(..., wholetext=True)``) flow through a
-``mapInPandas`` UDTF that parses the first ``<table>`` with the stdlib
-``html.parser`` (bs4 is not available in this environment) and emits one
-output row per ``<tr>`` with a stable in-document ``row_idx``.
+The one reader of the reference corpus' yearly roster files, batch and
+streaming: whole-file text rows (``spark.read.text(..., wholetext=True)``
+in ``read_roster_rows``, the ``text`` file-stream source in
+``streaming.ops.stream_roster_rows``) flow through the same ``mapInPandas``
+body, which parses the first ``<table>`` with the stdlib ``html.parser``
+(no bs4 dependency) and emits one output row per ``<tr>`` with a stable
+in-document ``row_idx``.
 
 Row-selection and rowspan semantics replicate the reference loader
 byte-for-byte (populate_db_ru_v1.py:503-651), including its quirks:
@@ -31,6 +33,7 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 from html.parser import HTMLParser
+from urllib.parse import unquote
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -206,7 +209,7 @@ def parse_first_table(html_text: str) -> tuple[list[_Row], int]:
 
 
 # ---------------------------------------------------------------------------
-# Reader UDTF
+# Reader
 # ---------------------------------------------------------------------------
 
 READER_SCHEMA = T.StructType(
@@ -408,7 +411,8 @@ def parse_content_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
     for pdf in batches:
         out: list[dict] = []
         for path, content in zip(pdf["path"], pdf["content"]):
-            base = path.rsplit("/", 1)[-1]
+            # input_file_name() is a percent-encoded URI ("a%20b_fabric1901.html")
+            base = unquote(path.rsplit("/", 1)[-1])
             m = _YEAR_RE.search(base)
             if not m:
                 continue  # :507 warn-and-skip
@@ -418,11 +422,14 @@ def parse_content_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
         ) if out else pd.DataFrame(columns=[f.name for f in READER_SCHEMA.fields])
 
 
+def _parse_wholetext(files: DataFrame) -> DataFrame:
+    """Whole-file ``text`` rows, batch or streaming -> reader rows."""
+    return files.select(
+        F.input_file_name().alias("path"), F.col("value").alias("content")
+    ).mapInPandas(parse_content_batches, READER_SCHEMA)
+
+
 def read_roster_rows(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """Read yearly roster HTML file(s) into one row per <tr> (B1 schema of
     FIXTURES.md), with the reference's exact row-selection semantics."""
-    raw = (
-        spark.read.text(paths, wholetext=True)
-        .select(F.input_file_name().alias("path"), F.col("value").alias("content"))
-    )
-    return raw.mapInPandas(parse_content_batches, READER_SCHEMA)
+    return _parse_wholetext(spark.read.text(paths, wholetext=True))

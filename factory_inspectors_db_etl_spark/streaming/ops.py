@@ -16,8 +16,8 @@ pattern IS Spark's file streaming source, so the module provides:
   ``transformWithStateInPandas`` form (``stateful_running_stats_tws``,
   RocksDB-backed state, pyspark >= 4.0);
 * ``stream_roster_rows`` — incremental ingestion of new yearly roster
-  HTML files through the SAME reader UDTF the batch ETL uses (one code
-  path for batch and streaming, the Spark ideal).
+  HTML files through the same ``mapInPandas`` reader the batch ETL uses
+  (``sources.html_table``: one code path for batch and streaming).
 
 Every op returns an unstarted streaming DataFrame; ``run_available_now``
 executes it to a deterministic finite result (Trigger.AvailableNow ->
@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..sources.html_table import READER_SCHEMA
+from ..sources.html_table import _parse_wholetext
 from ..sources.tables import load_table
 
 EVENTS_SCHEMA = T.StructType(
@@ -488,19 +488,13 @@ def stream_static_enrich(events: DataFrame, dim: DataFrame, key: str = "user_id"
 
 def stream_roster_rows(spark: SparkSession, dir_glob: str) -> DataFrame:
     """Incremental roster ingestion: file-stream whole HTML documents and
-    push them through the batch ETL's reader UDTF — new yearly files are
+    push them through the batch ETL's reader — new yearly files are
     picked up exactly once via the source's file log (the streaming form
-    of populate_db_ru_v1.py:781-784's per-file loop).  One parser body
-    serves batch and streaming."""
-    from ..sources.html_table import parse_content_batches
-
-    raw = (
-        spark.readStream.format("text")
-        .option("wholetext", "true")
-        .load(dir_glob)
-        .select(F.input_file_name().alias("path"), F.col("value").alias("content"))
-    )
-    return raw.mapInPandas(parse_content_batches, READER_SCHEMA)
+    of populate_db_ru_v1.py:781-784's per-file loop).  A file rewritten
+    in place is not picked up again; reload a corrected year in batch
+    with ``inspectors_etl.refresh_year_partitions``."""
+    raw = spark.readStream.format("text").option("wholetext", "true").load(dir_glob)
+    return _parse_wholetext(raw)
 
 
 def cdc_snapshot_upsert(

@@ -344,26 +344,6 @@ def test_warehouse_full_corpus_counts(spark):
     fact.unpersist()
 
 
-def test_html_roster_datasource_matches_mapinpandas_reader(spark):
-    """The Spark-4 Python Data Source form of the S2 reader
-    (spark.read.format('html_roster')) must be row-identical to the
-    mapInPandas form — both run the same parser body — and must plan one
-    input partition per file (scan parallelism = corpus size, document
-    order local to a task)."""
-    from factory_inspectors_db_etl_spark.sources.html_roster_source import (
-        HtmlRosterDataSource,
-    )
-    from factory_inspectors_db_etl_spark.sources.html_table import read_roster_rows
-
-    glob = "/root/reference/diplom/fabric*.html"
-    spark.dataSource.register(HtmlRosterDataSource)
-    ds = spark.read.format("html_roster").load(glob)
-    assert ds.rdd.getNumPartitions() == 11  # one per corpus file
-    a = sorted(tuple(r) for r in ds.collect())
-    b = sorted(tuple(r) for r in read_roster_rows(spark, glob).collect())
-    assert a == b
-
-
 def test_refresh_year_partitions_dynamic_overwrite(spark, tmp_path):
     """Dynamic partition overwrite rewrites ONLY the year being
     refreshed: other years' parquet files (inode-identical) survive, the

@@ -77,20 +77,6 @@ def test_nanos_probe_restores_conf_on_failure(spark):
     assert spark.conf.get(key, None) == before
 
 
-def test_roster_source_empty_glob_raises():
-    from factory_inspectors_db_etl_spark.sources.html_roster_source import HtmlRosterReader
-
-    with pytest.raises(FileNotFoundError, match="matched no files"):
-        HtmlRosterReader({"path": "/nonexistent_dir_xyz/fabric*.html"})
-
-
-def test_roster_source_remote_scheme_raises():
-    from factory_inspectors_db_etl_spark.sources.html_roster_source import HtmlRosterReader
-
-    with pytest.raises(ValueError, match="local filesystem only"):
-        HtmlRosterReader({"path": "s3://bucket/fabric*.html"})
-
-
 def test_build_dim_incremental_bucket_passthrough(spark):
     """The bucket param must change the phase-1 partitioning without
     changing the minted ids (order-preserving bucket contract)."""

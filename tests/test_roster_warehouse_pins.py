@@ -5,16 +5,20 @@ layout generations) instead of the reference corpus:
 * every warehouse table's value hash, ids included, per seed;
 * the reader's standardized columns against the JVM forms they replace;
 * the warehouse plan shape: no unpartitioned window, and one window
-  mints every dimension id.
+  mints every dimension id;
+* the reader's file contracts (decoded ``source_file``, files without a
+  year, empty globs, no shuffle) and its file-stream form.
 """
 
 from __future__ import annotations
 
 import importlib.util
 import os
+import shutil
 
 import duckdb
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from factory_inspectors_db_etl_spark.functions.text import standardize_text
@@ -25,6 +29,7 @@ from factory_inspectors_db_etl_spark.plans.inspectors_etl import (
     write_warehouse,
 )
 from factory_inspectors_db_etl_spark.sources.html_table import read_roster_rows
+from factory_inspectors_db_etl_spark.streaming import run_available_now, stream_roster_rows
 from perfbench import checks, roster_gen
 
 SEEDS = (1, 2, 3)
@@ -167,3 +172,84 @@ def test_warehouse_plan_shape(spark, corpora):
     assert not bad, bad
     assert _window_partitions(tables["assignments"]) == ["source_file"]
     assert _window_partitions(keyed_dims(parsed_assignment_rows(spark, corpora[1]))) == ["dim"]
+
+
+def _ordered(df) -> list:
+    return df.orderBy("source_file", "row_idx").collect()
+
+
+def _copy(corpus: str, dst, names: dict[str, str]) -> None:
+    """Copy seeded files into ``dst``: {new name: seeded name}."""
+    for new, old in names.items():
+        shutil.copy(os.path.join(corpus, old), dst / new)
+
+
+def test_reader_decodes_source_file(spark, corpora, tmp_path):
+    """``source_file`` is the file's own base name, although
+    ``input_file_name()`` percent-encodes it ("архив%201_fabric1901.html";
+    a literal "%" comes back as "%25")."""
+    names = {
+        "архив 1_fabric1901.html": "a00_fabric1901.html",
+        "100%_fabric1905.html": "a00_fabric1905.html",
+    }
+    _copy(corpora[1], tmp_path, names)
+    got = read_roster_rows(spark, str(tmp_path))
+    assert {r[0] for r in got.select("source_file").distinct().collect()} == set(names)
+    back = F.create_map(*[F.lit(x) for pair in names.items() for x in pair])
+    want = read_roster_rows(spark, [os.path.join(corpora[1], n) for n in names.values()])
+    assert _ordered(got.withColumn("source_file", back[F.col("source_file")])) == _ordered(want)
+
+
+def test_reader_skips_files_without_year(spark, corpora, tmp_path):
+    """A roster whose name has no ``fabricYYYY.html`` yields no rows."""
+    _copy(corpora[1], tmp_path, {"a00_fabric.html": "a00_fabric1901.html"})
+    assert read_roster_rows(spark, str(tmp_path)).count() == 0
+
+
+def test_reader_empty_glob_raises(spark, tmp_path):
+    """A glob that matches nothing fails loudly, not as an empty DataFrame."""
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_roster_rows(spark, str(tmp_path / "fabric*.html"))
+
+
+def test_reader_plan_has_no_exchange(spark, corpora):
+    """One file parses in one task: the reader adds no shuffle."""
+    plan = read_roster_rows(spark, corpora[1])._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+
+
+def test_roster_incremental_ingestion_exactly_once(spark, corpora, tmp_path):
+    """A yearly file arriving between two runs on one checkpoint is read
+    once: run 2 appends only the new file's rows, and each file's rows
+    equal the batch reader's."""
+    src = tmp_path / "incoming"
+    src.mkdir()
+    out = str(tmp_path / "out")
+
+    def run_once():
+        q = (
+            stream_roster_rows(spark, str(src))
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return spark.read.parquet(out)
+
+    _copy(corpora[1], src, {"a00_fabric1901.html": "a00_fabric1901.html"})
+    n1 = run_once().count()
+    assert n1 > 0
+    _copy(corpora[1], src, {"a00_fabric1905.html": "a00_fabric1905.html"})
+    got = run_once()
+    assert got.filter(F.col("source_file") == "a00_fabric1901.html").count() == n1
+    assert _ordered(got) == _ordered(read_roster_rows(spark, str(src)))
+
+
+def test_roster_file_stream_matches_batch_reader(spark, corpora, tmp_path):
+    """Streaming a G1 and a G3 file gives the batch reader's rows."""
+    _copy(corpora[1], tmp_path, {n: n for n in ("a00_fabric1901.html", "a00_fabric1913.html")})
+    got = run_available_now(stream_roster_rows(spark, str(tmp_path)), "t_roster_seeded")
+    assert _ordered(got) == _ordered(read_roster_rows(spark, str(tmp_path)))

@@ -590,54 +590,6 @@ def test_streaming_cdc_apply_equals_batch_merge(spark, tmp_path):
     assert got == {1: ("one-b", 11.0), 3: ("three-c", 33.0), 4: ("four", 40.0)}
 
 
-def test_html_roster_stream_datasource_incremental(spark, tmp_path):
-    """Spark-4 SimpleDataSourceStreamReader on the html_roster source:
-    run 1 ingests the initial file, run 2 (same checkpoint) appends ONLY
-    the file that arrived in between, and rows equal the batch reader's
-    for the same files."""
-    from factory_inspectors_db_etl_spark.sources.html_roster_source import (
-        HtmlRosterDataSource,
-    )
-    from factory_inspectors_db_etl_spark.sources.html_table import read_roster_rows
-
-    spark.dataSource.register(HtmlRosterDataSource)
-    src = tmp_path / "tail"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-
-    def run_once():
-        q = (
-            spark.readStream.format("html_roster")
-            .load(f"{src}/*.html")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out)
-
-    shutil.copy("/root/reference/diplom/fabric1901.html", src / "fabric1901.html")
-    got1 = run_once()
-    n1 = got1.count()
-    assert n1 > 0 and got1.select("source_file").distinct().count() == 1
-
-    shutil.copy("/root/reference/diplom/fabric1905.html", src / "fabric1905.html")
-    got2 = run_once()
-    per_file = {r["source_file"]: r["count"] for r in got2.groupBy("source_file").count().collect()}
-    assert per_file["fabric1901.html"] == n1  # not reprocessed
-    assert per_file["fabric1905.html"] > 0
-
-    want = read_roster_rows(spark, str(src))
-    assert got2.count() == want.count()
-    assert _rows(got2, "source_file", "row_idx", "row_kind") == _rows(
-        want, "source_file", "row_idx", "row_kind"
-    )
-
-
 def test_stateful_sessionize_cross_batch_reorder(spark, tmp_path):
     """A later micro-batch delivering a within-watermark event EARLIER
     than the stored session end must interval-merge (extend the session
@@ -682,102 +634,6 @@ def test_stateful_sessionize_cross_batch_reorder(spark, tmp_path):
     assert gap[0].session_start == "2024-01-01 10:00:00"
     assert gap[0].session_end == "2024-01-01 10:05:00"
     assert gap[0].n_events == 3
-
-
-def test_html_roster_stream_picks_up_in_place_rewrite(spark, tmp_path):
-    """A roster file REWRITTEN IN PLACE (the corrected-roster case) must
-    be re-ingested: the offset tracks (mtime, size), not just the name.
-    Output contains both generations (append sink can't retract); the
-    second generation's rows equal a batch read of the new content."""
-    import os
-    import time as _time
-
-    from factory_inspectors_db_etl_spark.sources.html_roster_source import (
-        HtmlRosterDataSource,
-    )
-
-    spark.dataSource.register(HtmlRosterDataSource)
-    src = tmp_path / "tail"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-
-    def run_once():
-        q = (
-            spark.readStream.format("html_roster")
-            .load(f"{src}/*.html")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out)
-
-    shutil.copy("/root/reference/diplom/fabric1901.html", src / "fabric1901.html")
-    n1 = run_once().count()
-    assert n1 > 0
-
-    # no change -> no new rows
-    assert run_once().count() == n1
-
-    # rewrite in place with different content (and force a distinct mtime
-    # in case the filesystem's mtime granularity is coarse)
-    _time.sleep(0.05)
-    shutil.copy("/root/reference/diplom/fabric1905.html", src / "fabric1901.html")
-    os.utime(src / "fabric1901.html")
-    got = run_once()
-    n2 = got.count()
-    assert n2 > n1  # rewrite re-ingested
-
-    want = spark.read.format("html_roster").load(f"{src}/*.html")
-    assert n2 - n1 == want.count()
-
-
-def test_html_roster_offset_legacy_and_missing_file_replay():
-    """Offset-format unit pins (no Spark needed): legacy name-only
-    offsets adopt signatures without re-emitting, and replay of a span
-    whose file was deleted warns and skips instead of raising."""
-    import warnings
-
-    from factory_inspectors_db_etl_spark.sources.html_roster_source import (
-        HtmlRosterSimpleStreamReader,
-    )
-
-    import os
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        p = os.path.join(d, "fabric1901.html")
-        shutil.copy("/root/reference/diplom/fabric1901.html", p)
-        rdr = HtmlRosterSimpleStreamReader({"path": f"{d}/*.html"})
-
-        # legacy list-of-names offset: file already ingested under the old
-        # format -> read() adopts the real signature, emits NOTHING
-        rows, end = rdr.read({"processed": [p]})
-        assert list(rows) == []
-        sig = end["processed"][p]
-        assert ":" in sig  # mtime_ns:size
-
-        # replay across the legacy-adoption span emits nothing either
-        assert rdr.readBetweenOffsets({"processed": [p]}, end) == []
-
-        # fresh ingest from the real initial offset
-        rows2, end2 = rdr.read(rdr.initialOffset())
-        rows2 = list(rows2)
-        assert len(rows2) > 0
-        replayed = rdr.readBetweenOffsets(rdr.initialOffset(), end2)
-        assert len(replayed) == len(rows2)
-
-        # delete the file: replay warns and returns [] instead of raising
-        os.remove(p)
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            gone = rdr.readBetweenOffsets(rdr.initialOffset(), end2)
-        assert gone == []
-        assert any("no longer exists" in str(x.message) for x in w)
 
 
 def test_stream_stream_left_outer_matches_batch_with_watermark_cut(
@@ -914,48 +770,6 @@ def test_stream_stream_full_outer_matches_batch_with_watermark_cut(
     wm = _final_watermark(ev, "90 minutes")
     old_unmatched_views = {k for k, ts in unmatched_views.items() if ts < wm}
     assert old_unmatched_views and old_unmatched_views <= got_view_nulls
-
-
-def test_html_roster_replay_skips_rewritten_file_without_duplicating():
-    """Recovery edge (round-5 review finding): a file rewritten IN PLACE
-    between commit and recovery must NOT be replayed as the committed
-    batch (that would fabricate the old batch from new bytes AND
-    duplicate the rewrite, which the next read() emits as its own
-    batch).  The committed generation is lost with a warning; the new
-    generation arrives exactly once."""
-    import os
-    import tempfile
-    import time as _time
-    import warnings
-
-    from factory_inspectors_db_etl_spark.sources.html_roster_source import (
-        HtmlRosterSimpleStreamReader,
-    )
-
-    with tempfile.TemporaryDirectory() as d:
-        p = os.path.join(d, "fabric1901.html")
-        shutil.copy("/root/reference/diplom/fabric1901.html", p)
-        rdr = HtmlRosterSimpleStreamReader({"path": f"{d}/*.html"})
-        rows1, end1 = rdr.read(rdr.initialOffset())
-        n1 = len(list(rows1))
-        assert n1 > 0
-
-        # rewrite in place (distinct mtime) BEFORE recovery replays
-        _time.sleep(0.05)
-        shutil.copy("/root/reference/diplom/fabric1905.html", p)
-        os.utime(p)
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            replayed = rdr.readBetweenOffsets(rdr.initialOffset(), end1)
-        assert replayed == []
-        assert any("rewritten" in str(x.message) for x in w)
-
-        # the new generation then arrives exactly once as its own batch
-        rows2, end2 = rdr.read(end1)
-        n2 = len(list(rows2))
-        assert n2 > 0
-        # and that batch IS replayable (signature still matches)
-        assert len(rdr.readBetweenOffsets(end1, end2)) == n2
 
 
 def test_stream_stream_semi_join_matches_batch(spark, sf_dir, events_stream):
